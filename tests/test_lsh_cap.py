@@ -248,3 +248,40 @@ def test_pair_rows_unique_per_band_and_count_equals_count_distinct(spark):
             F.countDistinct("band").alias("nd"),
         )
         assert both.filter(F.col("n") != F.col("nd")).count() == 0, maker.__name__
+
+
+def test_sql_helpers_output_contract(spark):
+    """The near-dup helpers are spark.sql blocks; pin what their callers
+    rely on: column names and types of the band keys, the candidate
+    pairs (every cap mode) and the e2g/e2m/e2c seats, and exactly one
+    bucket key per (doc, band) in every hash/shingle mode — the
+    precondition of count_shared_bands."""
+    from wx20222_bigdata_spark.registry import all_queries
+
+    corpus = _corpus_with_mutants_spark(spark, SF)
+    n_docs = corpus.count()
+    for production_hash in (False, True):
+        for ws in (True, False):
+            bands = minhash_band_keys(
+                corpus, production_hash=production_hash, whitespace=ws
+            )
+            assert bands.schema.simpleString() == (
+                "struct<doc_id:bigint,band:int,bucket_key:string>"
+            )
+            per_doc_band = bands.groupBy("doc_id", "band").count()
+            assert per_doc_band.filter(F.col("count") != 1).count() == 0
+            assert per_doc_band.count() == 4 * n_docs
+    bands = minhash_band_keys(corpus)
+    for kwargs in ({}, {"max_bucket_size": 500},
+                   {"max_bucket_size": 500, "cap_mode": "semijoin"}):
+        assert lsh_candidate_pairs(bands, **kwargs).schema.simpleString() == (
+            "struct<id_a:bigint,id_b:bigint,band:int>"
+        ), kwargs
+    q = all_queries()
+    for name in ("e2g_minhash_lsh_production", "e2m_char_lsh_production"):
+        assert q[name](spark, SF).schema.simpleString() == (
+            "struct<id_a:bigint,id_b:bigint,n_shared_bands:bigint>"
+        ), name
+    assert q["e2c_simhash"](spark, SF).schema.simpleString() == (
+        "struct<doc_id:bigint,simhash:bigint>"
+    )

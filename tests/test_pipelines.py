@@ -44,6 +44,39 @@ def test_evaluate_submission_golden_values(spark, tmp_path):
     assert row.mean_f1 == round((4 / 6 + 5 / 6 + 2 / 3 + (8 / 9 + 2 / 3) / 2) / 4, 6)
 
 
+def test_macro_f1_drops_null_class_ids(spark):
+    """macro_f1's precondition is enforced: rows with a NULL truth or pred
+    id are not scored, and the result equals the DuckDB full-outer-join
+    form over the non-NULL rows only."""
+    import duckdb
+
+    from wx20222_bigdata_spark.operators.metrics import macro_f1
+
+    rows = [(0, 0), (0, 1), (1, 1), (1, 1), (2, 2), (3, 2),
+            (2, None), (None, 2), (None, None), (None, 3)]
+    df = spark.createDataFrame(rows, "truth INT, pred INT")
+    got = macro_f1(df, "truth", "pred").collect()[0].f1
+    values = ", ".join(
+        f"({'NULL' if t is None else t}, {'NULL' if p is None else p})"
+        for t, p in rows
+    )
+    want = duckdb.sql(f"""
+        WITH p AS (
+          SELECT * FROM (VALUES {values}) v(truth, pred)
+          WHERE truth IS NOT NULL AND pred IS NOT NULL
+        ),
+        t AS (SELECT truth AS c, COUNT(*) AS n_true FROM p GROUP BY 1),
+        q AS (SELECT pred AS c, COUNT(*) AS n_pred FROM p GROUP BY 1),
+        k AS (SELECT truth AS c, COUNT(*) AS tp FROM p WHERE truth = pred GROUP BY 1)
+        SELECT AVG(2.0 * COALESCE(tp, 0)
+                   / (COALESCE(n_true, 0) + COALESCE(n_pred, 0))) AS f1
+        FROM t FULL JOIN q USING (c) FULL JOIN k USING (c)
+    """).fetchone()[0]
+    assert got == pytest.approx(float(want), abs=1e-12)
+    # classes 0..3 over the 6 non-NULL rows: 2/3, 4/5, 2/3, 0
+    assert got == pytest.approx((2 / 3 + 4 / 5 + 2 / 3 + 0) / 4, abs=1e-12)
+
+
 def test_evaluate_submission_integrity_failures(spark, tmp_path):
     from wx20222_bigdata_spark.pipelines import (
         SubmissionIntegrityError,
@@ -60,6 +93,13 @@ def test_evaluate_submission_integrity_failures(spark, tmp_path):
     _write_csv(tmp_path / "p2.csv", [("v1", "0101")])
     with pytest.raises(SubmissionIntegrityError, match="count mismatch"):
         evaluate_submission(spark, str(tmp_path / "p2.csv"), str(tmp_path / "t.csv"))
+    # blank category_id: macro_f1 would skip the row, so it must fail here
+    _write_csv(tmp_path / "p3.csv", [("v1", "0101"), ("v2", "")])
+    with pytest.raises(SubmissionIntegrityError, match="blank category_id: 1 in"):
+        evaluate_submission(spark, str(tmp_path / "p3.csv"), str(tmp_path / "t.csv"))
+    _write_csv(tmp_path / "t4.csv", [("v1", ""), ("v2", "0102")])
+    with pytest.raises(SubmissionIntegrityError, match="1 in ground truth"):
+        evaluate_submission(spark, str(tmp_path / "t.csv"), str(tmp_path / "t4.csv"))
 
 
 MAX_FRAMES = 4

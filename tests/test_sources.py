@@ -247,3 +247,60 @@ def test_compacted_parquet_zero_estimate_falls_back(spark, tmp_path):
     )
     assert info == {"rows": 100, "est_row_bytes": 0.0, "n_shards": 0}
     assert spark.read.parquet(str(out)).count() == 100
+
+
+def test_load_table_schema_memo_rechecks_rewritten_file(spark, tmp_path):
+    """load_table keeps the validated schema per file version: an
+    overwrite with the same schema returns the new rows, and an overwrite
+    with a drifted schema is caught by the drift check again — also when
+    it keeps the file's size and mtime."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from wx20222_bigdata_spark import catalog
+
+    path = tmp_path / "documents.parquet"
+
+    def write(ids, id_type=pa.int64(), source_name="source"):
+        pq.write_table(
+            pa.table({
+                "doc_id": pa.array(ids, id_type),
+                "text": [f"text {i}" for i in ids],
+                "lang": ["en"] * len(ids),
+                source_name: ["web"] * len(ids),
+                "n_chars": pa.array([6] * len(ids), pa.int64()),
+            }),
+            path,
+        )
+
+    def ids():
+        df = catalog.load_table(spark, str(tmp_path), "documents")
+        return sorted(r.doc_id for r in df.select("doc_id").collect())
+
+    write([1, 2, 3])
+    assert ids() == [1, 2, 3]
+    version = catalog._file_version(str(path))
+    assert catalog._SCHEMA_MEMO[str(path)][0] == version
+    assert ids() == [1, 2, 3]  # memo hit: declared-schema read, same rows
+
+    write([4, 5, 6, 7])  # same schema, different rows
+    assert ids() == [4, 5, 6, 7]
+    assert catalog._SCHEMA_MEMO[str(path)][0] == catalog._file_version(str(path))
+
+    # same-size rewrite with the mtime put back (cp -p / rsync -t): a
+    # renamed column of the same length keeps (mtime_ns, size), so only
+    # ctime/inode in the version can send the file back to the drift check
+    write([4, 5, 6, 7])
+    assert ids() == [4, 5, 6, 7]
+    before = os.stat(path)
+    write([4, 5, 6, 7], source_name="sourcf")
+    os.utime(path, ns=(before.st_atime_ns, before.st_mtime_ns))
+    after = os.stat(path)
+    assert (after.st_mtime_ns, after.st_size) == (before.st_mtime_ns, before.st_size)
+    with pytest.raises(ValueError, match="schema drift"):
+        catalog.load_table(spark, str(tmp_path), "documents")
+
+    write([8, 9], id_type=pa.int32())  # drifted doc_id type
+    with pytest.raises(ValueError, match="schema drift"):
+        catalog.load_table(spark, str(tmp_path), "documents")

@@ -55,8 +55,8 @@ def main() -> None:
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
             "0" if prefer_smj else "67108864",
         )
-        df = q[name](spark, SF_DIR)
         t0 = time.perf_counter()
+        df = q[name](spark, SF_DIR)
         df.write.format("noop").mode("overwrite").save()
         return time.perf_counter() - t0
 

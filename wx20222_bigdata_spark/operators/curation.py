@@ -530,6 +530,7 @@ def e7d_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
+    # {{view}} = spark.sql placeholder; {X} = Python constant rendered as a literal
     # Stage frame: staged corpus -> tokenize -> quality flag -> exact-dedup
     # window, one analysis pass.
     tok = spark.sql(

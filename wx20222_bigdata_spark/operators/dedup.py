@@ -159,18 +159,23 @@ def _corpus_with_mutants_spark(
     the char-shingle tier (e2j 4.34→2.09 s; ~10× the per-byte CPU of
     word shingles), a slight LOSS for word-mode LSH (e2b 2.01→2.59 s —
     the extra shuffle outweighs the parallelism). Word-mode callers
-    keep the default False."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    keep the default False. One ``UNION ALL`` block, mirroring
+    ``_CORPUS_DUCK``."""
+    docs = load_table(spark, sf_dir, "documents")
     if rebalance:
-        docs = rebalance_small_scan(docs, f"{sf_dir}/documents.parquet")
-    mutants = (
-        docs.filter(F.col("doc_id") % 50 == 0)
-        .select(
-            (F.col("doc_id") + 100000).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" extra")).alias("text"),
+        docs = rebalance_small_scan(
+            docs.select("doc_id", "text"), f"{sf_dir}/documents.parquet"
         )
+    # {docs} = spark.sql placeholder (no Python constants in this block)
+    return spark.sql(
+        """
+        SELECT doc_id, text FROM {docs}
+        UNION ALL
+        SELECT doc_id + 100000 AS doc_id, concat(text, ' extra') AS text
+        FROM {docs} WHERE doc_id % 50 = 0
+        """,
+        docs=docs,
     )
-    return docs.unionByName(mutants)
 
 
 _CORPUS_DUCK = """
@@ -223,12 +228,12 @@ CASE WHEN length(ctext) >= {CHAR_SHINGLE_N}
 """
 
 
-def _shingle_hashes(
+def minhash_band_keys(
     corpus: DataFrame, production_hash: bool = False, whitespace: bool = True
 ) -> DataFrame:
-    """Shared front of every MinHash pipeline: tokenize → shingle → hash.
-    Returns (doc_id, h) — ONE row per distinct shingle, no permutation
-    explode.
+    """(doc_id, band, bucket_key) — the whole MinHash front half as ONE
+    ``spark.sql`` block: tokenize → shingle → hash, then all {N_HASHES}
+    permutation minima, then the band keys.
 
     Two hash tiers, BOTH JVM-native:
     - cross-engine ``md5_hash`` (default): DuckDB-reproducible, the
@@ -240,108 +245,61 @@ def _shingle_hashes(
 
     ``whitespace=False`` shingles character {CHAR_SHINGLE_N}-grams of the
     space-stripped text instead of word trigrams — the CJK mode; the rest
-    of the pipeline (hash → minhash → bands) is identical."""
-    if whitespace:
-        toks = corpus.select(
-            "doc_id",
-            F.expr("filter(split(text, ' '), x -> length(x) > 0)").alias("toks"),
-        )
-        shingle_expr = _SPARK_SHINGLES
-    else:
-        toks = corpus.select(
-            "doc_id", F.expr("replace(text, ' ', '')").alias("ctext")
-        )
-        shingle_expr = _SPARK_CHAR_SHINGLES
-    shingles = toks.select(
-        "doc_id",
-        F.explode(F.array_distinct(F.expr(shingle_expr))).alias("tok"),
-    )
-    h = (
-        F.pmod(F.xxhash64("tok"), F.lit(MOD))
-        if production_hash
-        else F.expr(spark_md5_hash("tok", mod=MOD))
-    )
-    return shingles.select("doc_id", h.alias("h"))
+    of the block (hash → minhash → bands) is identical.
 
-
-def _permuted_shingle_hashes(
-    corpus: DataFrame, production_hash: bool = False, whitespace: bool = True
-) -> tuple[DataFrame, "F.Column"]:
-    """:func:`_shingle_hashes` with the permutation index exploded:
-    (doc_id, h, j) rows and the h_j = (a_j*h + b_j) mod p column — for
-    consumers that need raw per-permutation rows (signature export).
-    The LSH band path does NOT use this (16 aggregates beat a ×16
-    explode — see :func:`minhash_band_keys`)."""
-    hashed = _shingle_hashes(
-        corpus, production_hash=production_hash, whitespace=whitespace
-    )
-    a_arr = F.array([F.lit(a) for a in MINHASH_A[:N_HASHES]])
-    b_arr = F.array([F.lit(b) for b in MINHASH_B[:N_HASHES]])
-    perms = hashed.select(
-        "doc_id",
-        "h",
-        F.explode(F.sequence(F.lit(0), F.lit(N_HASHES - 1))).alias("j"),
-    )
-    hj = (
-        F.element_at(a_arr, F.col("j") + 1) * F.col("h")
-        + F.element_at(b_arr, F.col("j") + 1)
-    ) % MOD
-    return perms, hj
-
-
-def minhash_signatures(corpus: DataFrame) -> DataFrame:
-    """(doc_id, j, minhash) signature rows — the generic MinHash output
-    for consumers that need raw signatures (similarity estimation).
-    The LSH query itself uses the fused ``minhash_band_keys``."""
-    perms, hj = _permuted_shingle_hashes(corpus)
-    return perms.select("doc_id", "j", hj.alias("hj")).groupBy("doc_id", "j").agg(
-        F.min("hj").alias("minhash")
-    )
-
-
-def minhash_band_keys(
-    corpus: DataFrame, production_hash: bool = False, whitespace: bool = True
-) -> DataFrame:
-    """(doc_id, band, bucket_key) in ONE shuffle and NO row
-    multiplication: all {N_HASHES} permutation minima are computed as
+    One shuffle and NO row multiplication: the {N_HASHES} minima are
     independent ``min((a_j*h + b_j) % p)`` aggregates of a single
-    ``groupBy(doc_id)`` — the permutation index is never exploded into
-    rows (the earlier ×{N_HASHES} explode materialized every shingle
-    hash 16 times before the map-side combine; measured ~18% slower at
-    sf0.1 on both shingle modes, and at 100 TB the 16× map-side row
-    volume is pure waste). Band keys are then assembled from the 16
-    columns with a narrow ×{N_BANDS} struct explode of one tiny row per
-    doc. Identical bucket keys (bit-equal pair sets verified)."""
-    hashed = _shingle_hashes(
-        corpus, production_hash=production_hash, whitespace=whitespace
+    ``GROUP BY doc_id`` over one row per distinct shingle — the
+    permutation index is never exploded into rows (the earlier ×{N_HASHES}
+    explode materialized every shingle hash 16 times before the map-side
+    combine; measured ~18% slower at sf0.1 on both shingle modes, and at
+    100 TB the 16× map-side row volume is pure waste). Band keys come
+    from a narrow ×{N_BANDS} struct explode of one tiny row per doc, so
+    there is exactly ONE bucket key per (doc, band).
+
+    The block is rendered as text (aggregates and band structs are
+    Python constants), so Spark analyzes the plan once instead of
+    paying one py4j round trip and re-analysis per hash, band and column."""
+    if whitespace:
+        shingles = f"""
+          SELECT doc_id, explode(array_distinct({_SPARK_SHINGLES})) AS tok
+          FROM (SELECT doc_id,
+                       filter(split(text, ' '), x -> length(x) > 0) AS toks
+                FROM {{corpus}})"""
+    else:
+        shingles = f"""
+          SELECT doc_id, explode(array_distinct({_SPARK_CHAR_SHINGLES})) AS tok
+          FROM (SELECT doc_id, replace(text, ' ', '') AS ctext FROM {{corpus}})"""
+    h = (
+        f"pmod(xxhash64(tok), {MOD})"
+        if production_hash
+        else spark_md5_hash("tok", mod=MOD)
     )
-    aggs = [
-        F.min(
-            (F.lit(MINHASH_A[j]) * F.col("h") + F.lit(MINHASH_B[j])) % MOD
-        ).alias(f"_m{j}")
+    mins = ",\n".join(
+        f"min(({MINHASH_A[j]} * h + {MINHASH_B[j]}) % {MOD}) AS m{j}"
         for j in range(N_HASHES)
-    ]
-    sigs = hashed.groupBy("doc_id").agg(*aggs)
-    band_structs = []
-    for band in range(N_BANDS):
-        key = F.concat_ws(
-            "-",
-            *[
-                F.col(f"_m{band * ROWS_PER_BAND + r}").cast("string")
-                for r in range(ROWS_PER_BAND)
-            ],
+    )
+    bands = ",\n".join(
+        f"struct({band} AS band, concat_ws('-', "
+        + ", ".join(
+            f"CAST(m{band * ROWS_PER_BAND + r} AS STRING)"
+            for r in range(ROWS_PER_BAND)
         )
-        band_structs.append(
-            F.struct(
-                F.lit(band).cast("int").alias("band"), key.alias("bucket_key")
-            )
+        + ") AS bucket_key)"
+        for band in range(N_BANDS)
+    )
+    # {{view}} = spark.sql placeholder; {X} = Python constant rendered as a literal
+    return corpus.sparkSession.sql(
+        f"""
+        WITH sigs AS (
+          SELECT doc_id, {mins}
+          FROM (SELECT doc_id, {h} AS h FROM ({shingles}))
+          GROUP BY doc_id
         )
-    return sigs.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bb")
-    ).select(
-        "doc_id",
-        F.col("bb.band").alias("band"),
-        F.col("bb.bucket_key").alias("bucket_key"),
+        SELECT doc_id, bb.band AS band, bb.bucket_key AS bucket_key
+        FROM sigs LATERAL VIEW explode(array({bands})) t AS bb
+        """,
+        corpus=corpus,
     )
 
 
@@ -377,7 +335,13 @@ def lsh_candidate_pairs(
     stress — SCALE.md "LSH at sf10"); recall loss is bounded because a
     true near-dup pair inside a pruned bucket still collides in its
     other ``N_BANDS − 1`` bands unless those buckets are degenerate
-    too."""
+    too.
+
+    One ``spark.sql`` block: the cap (if any) as the ``kept`` CTE, then
+    the band self-equi-join on (band, bucket_key) with ``id_a < id_b``.
+    The CTE is deterministic, so Catalyst inlines it into both join
+    branches and reuses the window's exchange."""
+    kept = "SELECT doc_id, band, bucket_key FROM {bands}"
     if max_bucket_size is not None:
         if cap_mode == "semijoin":
             # Alternative cap plan (r6 verdict item 7 A/B): map-side-
@@ -390,42 +354,32 @@ def lsh_candidate_pairs(
             # the production tiers, SCALE.md r7: it loses to the window
             # pre-count at sf10 on both tiers); the band rows themselves
             # are never pre-shuffled.
-            over = (
-                bands.groupBy("band", "bucket_key")
-                .agg(F.count("*").alias("_bsz"))
-                .filter(F.col("_bsz") > max_bucket_size)
-                .select("band", "bucket_key")
-            )
-            bands = bands.join(
-                F.broadcast(over), ["band", "bucket_key"], "left_anti"
-            )
+            kept = f"""
+              SELECT /*+ BROADCAST(hot) */ k.doc_id, k.band, k.bucket_key
+              FROM {{bands}} k LEFT ANTI JOIN (
+                SELECT band, bucket_key FROM {{bands}}
+                GROUP BY band, bucket_key HAVING COUNT(*) > {max_bucket_size}
+              ) hot ON k.band = hot.band AND k.bucket_key = hot.bucket_key"""
         elif cap_mode == "window":
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("band", "bucket_key")
-            bands = (
-                bands.withColumn("_bsz", F.count("*").over(w))
-                .filter(F.col("_bsz") <= max_bucket_size)
-                .drop("_bsz")
-            )
+            kept = f"""
+              SELECT doc_id, band, bucket_key FROM (
+                SELECT doc_id, band, bucket_key,
+                       COUNT(*) OVER (PARTITION BY band, bucket_key) AS bsz
+                FROM {{bands}}
+              ) WHERE bsz <= {max_bucket_size}"""
         else:
             raise ValueError(f"unknown cap_mode {cap_mode!r}")
-    a = bands.select(
-        F.col("doc_id").alias("id_a"),
-        F.col("band").alias("band"),
-        F.col("bucket_key").alias("bk_a"),
+    # {{view}} = spark.sql placeholder; {X} = Python constant rendered as a literal
+    return bands.sparkSession.sql(
+        f"""
+        WITH kept AS ({kept})
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.band AS band
+        FROM kept a JOIN kept b
+          ON a.band = b.band AND a.bucket_key = b.bucket_key
+         AND a.doc_id < b.doc_id
+        """,
+        bands=bands,
     )
-    b = bands.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("band").alias("band_b"),
-        F.col("bucket_key").alias("bk_b"),
-    )
-    return a.join(
-        b,
-        (F.col("band") == F.col("band_b"))
-        & (F.col("bk_a") == F.col("bk_b"))
-        & (F.col("id_a") < F.col("id_b")),
-    ).select("id_a", "id_b", "band")
 
 
 def count_shared_bands(pairs: DataFrame) -> DataFrame:
@@ -786,31 +740,42 @@ def e2c_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ships one row per (doc, token) into a single map-side-combinable
     shuffle and assembles the fingerprint as a projection over the 20
     balance columns (measured 0.74 → 0.42 s sf0.1 median-of-5; at 100 TB the 20×
-    map-side row volume is pure waste). Bit-identical output."""
+    map-side row volume is pure waste). Bit-identical output.
+
+    The whole plan is one ``spark.sql`` block: the 20 aggregates and the
+    fingerprint sum are rendered as text, so Spark analyzes the tree
+    once instead of once per bit column."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("tok")
-    ).filter(F.length("tok") > 0)
-    hashed = toks.select("doc_id", F.expr(spark_md5_hash("tok", mod=MOD)).alias("h"))
-    bals = hashed.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.expr(f"(h div {1 << j}) % 2 = 1"), 1).otherwise(-1)
-            ).alias(f"_b{j}")
-            for j in range(20)
-        ]
-    )
-    fingerprint = sum(
-        F.when(F.col(f"_b{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
+    bals = ",\n".join(
+        f"sum(CASE WHEN (h div {1 << j}) % 2 = 1 THEN 1 ELSE -1 END) AS b{j}"
         for j in range(20)
     )
-    return bals.select("doc_id", fingerprint.cast("bigint").alias("simhash"))
+    fingerprint = " + ".join(
+        f"CASE WHEN b{j} > 0 THEN {1 << j} ELSE 0 END" for j in range(20)
+    )
+    # {{view}} = spark.sql placeholder; {X} = Python constant rendered as a literal
+    return spark.sql(
+        f"""
+        WITH bals AS (
+          SELECT doc_id, {bals}
+          FROM (
+            SELECT doc_id, {spark_md5_hash("tok", mod=MOD)} AS h
+            FROM (SELECT doc_id, explode(array_distinct(split(text, ' '))) AS tok
+                  FROM {{docs}})
+            WHERE length(tok) > 0
+          )
+          GROUP BY doc_id
+        )
+        SELECT doc_id, CAST({fingerprint} AS BIGINT) AS simhash FROM bals
+        """,
+        docs=docs,
+    )
 
 
 @query("e2g_minhash_lsh_production")
 def e2g_minhash_lsh_production(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2 MinHash-LSH on the PRODUCTION hash tier (xxhash64, 3× faster
-    than the cross-engine fold — see _permuted_shingle_hashes). Rows-only:
+    than the cross-engine fold — see minhash_band_keys). Rows-only:
     bucket ids are engine-specific; recall is still observable — the
     seeded mutants must collide (tested). Runs with the production
     frequent-bucket cap (PROD_MAX_BUCKET_SIZE): candidate volume stays

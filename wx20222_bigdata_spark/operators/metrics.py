@@ -67,14 +67,17 @@ def macro_f1(preds: DataFrame, truth: str, pred: str) -> DataFrame:
     full-outer semantics; the per-class arithmetic is unchanged
     (2.0 * tp / (n_true + n_pred) over the same integer counts).
 
-    NULL-class-id nuance (r12 verdict, documented not changed): the
-    unpivot groups NULL truth/pred ids into ONE class row, where the
-    old full-outer-join form produced two (nulls never equi-join).
-    Unobservable here — every registered caller derives class ids from
-    non-null dictionary codes, and the DuckDB oracles' own ``FULL JOIN
-    USING (class_id)`` has the same null-keyed two-row semantics as the
-    join form — so parity holds by construction; a caller with nullable
-    class columns should filter nulls on both engines first."""
+    Precondition: class ids are non-NULL. Rows whose truth OR pred id is
+    NULL are dropped first, so they are not scored at all; macro F1 then
+    equals a full-outer-join form over the non-NULL rows only
+    (law-tested against DuckDB in tests/test_pipelines.py). A caller
+    whose NULL ids mean "wrong" must reject them before this call, as
+    ``pipelines.evaluate_submission`` does for blank category ids.
+    The DuckDB oracles' own ``FULL JOIN USING (c)`` forms keep no such
+    filter, so they agree with this function only while the precondition
+    holds — as it does for every registered caller, whose class ids come
+    from non-null codes."""
+    preds = preds.filter(F.col(truth).isNotNull() & F.col(pred).isNotNull())
     per_class = (
         preds.select(
             F.explode(

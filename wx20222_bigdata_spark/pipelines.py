@@ -30,7 +30,8 @@ from wx20222_bigdata_spark.sources import (
 
 class SubmissionIntegrityError(ValueError):
     """Raised for dangling or duplicated vids — the reference hard-fails on
-    both (``evaluate.py:16-17,21-22``)."""
+    both (``evaluate.py:16-17,21-22``) — and for blank category ids, which
+    ``macro_f1`` would not score."""
 
 
 def evaluate_submission(
@@ -48,10 +49,19 @@ def evaluate_submission(
         "category_id", "true_category_id"
     )
     # integrity (one pass, one action): per-vid counts full-outer joined,
-    # reduced to dangling/total/duplicate stats in a single aggregation —
-    # the naive form re-scans the CSVs once per check.
-    pc = preds.groupBy("vid").agg(F.count("*").alias("n_p"))
-    tc = truth.groupBy("vid").agg(F.count("*").alias("n_t"))
+    # reduced to dangling/total/duplicate/blank stats in a single
+    # aggregation — the naive form re-scans the CSVs once per check.
+    # F.count(col) skips NULLs, so n - count(category_id) is the number of
+    # blank ids; macro_f1 drops such rows, so they must fail here or a
+    # blank prediction would cost accuracy but not macro F1.
+    pc = preds.groupBy("vid").agg(
+        F.count("*").alias("n_p"),
+        (F.count("*") - F.count("category_id")).alias("blank_p"),
+    )
+    tc = truth.groupBy("vid").agg(
+        F.count("*").alias("n_t"),
+        (F.count("*") - F.count("true_category_id")).alias("blank_t"),
+    )
     stats = (
         pc.join(tc, "vid", "full_outer")
         .agg(
@@ -61,6 +71,8 @@ def evaluate_submission(
             F.sum(F.coalesce("n_p", F.lit(0))).alias("n_pred"),
             F.sum(F.coalesce("n_t", F.lit(0))).alias("n_truth"),
             F.sum(F.when(F.col("n_p") > 1, 1).otherwise(0)).alias("dup_vids"),
+            F.sum(F.coalesce("blank_p", F.lit(0))).alias("blank_pred"),
+            F.sum(F.coalesce("blank_t", F.lit(0))).alias("blank_truth"),
         )
         .collect()[0]
     )
@@ -74,6 +86,11 @@ def evaluate_submission(
         )
     if stats.dup_vids:
         raise SubmissionIntegrityError("duplicate vids in submission")
+    if stats.blank_pred or stats.blank_truth:
+        raise SubmissionIntegrityError(
+            f"blank category_id: {stats.blank_pred} in submission, "
+            f"{stats.blank_truth} in ground truth"
+        )
 
     joined = preds.join(truth, "vid").select(
         F.col("true_category_id").alias("lv2"),
