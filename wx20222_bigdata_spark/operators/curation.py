@@ -39,35 +39,35 @@ def quality_features(docs: DataFrame) -> DataFrame:
     Narrow, no shuffle — shared by the batch funnel (e7), its
     accounting-only twin (e7c), and the streaming funnel
     (streaming/jobs.make_curation_funnel_batch), so all three gates are
-    the same expressions by construction."""
-    words = F.filter(F.split("text", " "), lambda x: F.length(x) > 0)
-    return docs.select(
+    the same expressions by construction. One ``selectExpr``: the
+    streaming funnel builds this per micro-batch, and Column functions
+    cost a py4j round trip each."""
+    return docs.selectExpr(
         "doc_id",
         "source",
-        F.md5("text").alias("content_key"),
-        F.size(words).cast("bigint").alias("n_tok"),
-        F.length("text").alias("n_char"),
-        (
-            F.length("text")
-            - F.length(
-                F.regexp_replace(
-                    F.regexp_replace(F.regexp_replace("text", r"\.", ""), ",", ""),
-                    "!",
-                    "",
-                )
-            )
-        ).alias("n_punct"),
+        "md5(text) AS content_key",
+        "CAST(size(filter(split(text, ' '), x -> length(x) > 0)) AS BIGINT) AS n_tok",
+        "length(text) AS n_char",
+        r"length(text) - length(regexp_replace(regexp_replace(regexp_replace("
+        r"text, '\\.', ''), ',', ''), '!', '')) AS n_punct",
     )
+
+
+#: Stage-2 quality predicate over :func:`quality_features` columns
+#: (Gopher/C4-style length + punct-ratio heuristics, same gate as e4d).
+#: ``try_divide`` turns an empty text's 0/0 punct ratio into NULL rather
+#: than an ANSI DIVIDE_BY_ZERO, so the streaming funnel's projected flag
+#: does not rely on AND short-circuiting past it (an empty text has
+#: n_tok = 0 and fails the first conjunct anyway).
+QUALITY_PASS_SQL = (
+    "n_tok >= 20 AND n_tok <= 1000"
+    " AND try_divide(CAST(n_punct AS DOUBLE), n_char) < 0.1"
+)
 
 
 def quality_gate(feats: DataFrame) -> DataFrame:
-    """Stage-2 quality predicate (Gopher/C4-style length + punct-ratio
-    heuristics, same gate as e4d)."""
-    return feats.filter(
-        (F.col("n_tok") >= 20)
-        & (F.col("n_tok") <= 1000)
-        & (F.col("n_punct").cast("double") / F.col("n_char") < 0.1)
-    )
+    """Rows of ``feats`` that pass :data:`QUALITY_PASS_SQL`."""
+    return feats.filter(QUALITY_PASS_SQL)
 
 
 @query(

@@ -7,6 +7,9 @@ code runs against Kafka/files in production and the file-source tests here.
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
 from collections.abc import Iterator
 
 import pandas as pd
@@ -15,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.window import Window
 
 EVENTS_STREAM_SCHEMA = T.StructType(
     [
@@ -145,8 +149,6 @@ def merge_sub_sessions(sub: DataFrame, gap: str = "30 minutes") -> DataFrame:
     lag→flag→cumsum→aggregate chain is the classic sessionize idiom;
     output matches s9c's schema (user_id, session_start, n_events,
     value_sum) so the equality law is oracle-checkable."""
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy("user_id").orderBy("start_ts")
     wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     flagged = sub.withColumn(
@@ -501,18 +503,9 @@ def make_idempotent_batch_writer(out_dir: str, checkpoint_dir: str):
     """The foreachBatch callable behind :func:`idempotent_parquet_sink`,
     exposed so the at-least-once replay path (same batch_id delivered
     twice) is directly testable."""
-    import json
-    import os
-
-    def _lineage_id() -> str:
-        # streaming query id: written by Spark to <checkpoint>/metadata
-        # before the first batch runs; stable across restarts.
-        meta = os.path.join(checkpoint_dir, "metadata")
-        with open(meta) as f:
-            return json.load(f)["id"]
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        run = _lineage_id()
+        run = _lineage_id(checkpoint_dir)
         marker = os.path.join(out_dir, f"_committed_{run}_{batch_id}")
         pointer = os.path.join(out_dir, "_current_run")
 
@@ -548,8 +541,6 @@ def read_committed(spark: SparkSession, out_dir: str) -> DataFrame:
     """Read ONLY the current lineage's committed batch partitions of an
     idempotent_parquet_sink output dir (the reader half of the commit
     protocol — see the lineage-namespacing note there)."""
-    import os
-
     pointer = os.path.join(out_dir, "_current_run")
     if not os.path.exists(pointer):
         return spark.createDataFrame([], "event_id bigint")
@@ -570,8 +561,7 @@ def read_committed(spark: SparkSession, out_dir: str) -> DataFrame:
 def _recover_state_swap(state_dir: str) -> None:
     """Repair the state-swap crash window (r5 ADVICE item 1).
 
-    The swap sequence in :func:`make_agg_merge_batch` /
-    :func:`make_curation_funnel_batch` is: ``rename(current → _old_{b})``
+    The swap sequence in :func:`_swap_state` is: ``rename(current → _old_{b})``
     then ``rename(_staging_{b} → current)`` then ``rmtree(_old_{b})``.
     Each rename is atomic, but a crash BETWEEN the two renames leaves no
     ``current`` while the intact pre-batch state sits in ``_old_{b}`` —
@@ -587,9 +577,7 @@ def _recover_state_swap(state_dir: str) -> None:
       removed either way; the replay rewrites its own staging dir.
     """
     import glob
-    import os
     import re
-    import shutil
 
     cur = os.path.join(state_dir, "current")
     olds = glob.glob(os.path.join(state_dir, "_old_*"))
@@ -607,6 +595,123 @@ def _recover_state_swap(state_dir: str) -> None:
             shutil.rmtree(o, ignore_errors=True)
     for stg in glob.glob(os.path.join(state_dir, "_staging_*")):
         shutil.rmtree(stg, ignore_errors=True)
+
+
+#: Declared schemas of the files the exactly-once writers read back each
+#: batch; reading with them skips Spark's footer-inference job. A NOT NULL
+#: field is one its writer never leaves NULL (see _read_declared).
+INDEX_KEYS_SCHEMA = T.StructType(
+    [T.StructField("content_key", T.StringType(), False),
+     T.StructField("batch_id", T.IntegerType())]
+)
+AGG_STATE_SCHEMA = T.StructType(
+    [T.StructField("day", T.StringType()), T.StructField("event_type", T.StringType()),
+     T.StructField("n_events", T.LongType(), False), T.StructField("sum_v", T.DecimalType(28, 2))]
+)
+FUNNEL_STATE_SCHEMA = T.StructType(
+    [T.StructField("source", T.StringType())]
+    + [T.StructField(c, T.LongType(), False)
+       for c in ("n_raw", "n_quality", "n_admitted", "admitted_tokens")]
+)
+
+
+def _lineage_id(checkpoint_dir: str | None) -> str | None:
+    """The checkpoint lineage id: the streaming query id Spark writes to
+    ``<checkpoint>/metadata`` before the first batch runs, stable across
+    restarts from the same checkpoint. ``None`` without a checkpoint
+    (direct-call testing)."""
+    if checkpoint_dir is None:
+        return None
+    with open(os.path.join(checkpoint_dir, "metadata")) as f:
+        return json.load(f)["id"]
+
+
+def _read_declared(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """``path`` read with its declared ``schema``, so no footer-inference
+    job runs. Such a read fills a column the files lack with NULLs, which
+    would lose counts silently; every NOT NULL field is therefore wrapped
+    in ``raise_error``, and schema drift fails the job that scans the
+    files (no extra Spark job)."""
+    return spark.read.schema(schema).parquet(path).selectExpr(
+        *[
+            f.name
+            if f.nullable
+            else f"coalesce({f.name}, raise_error('NULL {f.name}: the files lack "
+            f"this declared column')) AS {f.name}"
+            for f in schema.fields
+        ]
+    )
+
+
+def _seen_keys(spark: SparkSession, index_dir: str, batch_id: int) -> DataFrame | None:
+    """Content keys of the key index written before ``batch_id``, or None
+    before the first index write. Crash-window guard (r3 ADVICE): a failed
+    attempt of THIS batch may already have written its own index partition
+    (crash after the data/index writes but before the marker). Folding
+    those keys into the seen set would drop the batch's rows from its own
+    replay, and the mode-overwrite would then lose them for good.
+    Micro-batch ids are monotone, so the prior corpus is exactly the
+    partitions with batch_id < current."""
+    index_path = os.path.join(index_dir, "keys")
+    if not os.path.exists(index_path):
+        return None
+    return (
+        _read_declared(spark, index_path, INDEX_KEYS_SCHEMA)
+        .where(f"batch_id < {int(batch_id)}")
+        .select("content_key")
+    )
+
+
+def _stage_state(
+    spark: SparkSession,
+    state_dir: str,
+    batch_id: int,
+    lineage: str | None,
+    schema: T.StructType,
+    merge,
+) -> str | None:
+    """Write the state after this batch to ``state_dir/_staging_{batch_id}``
+    and return that dir for :func:`_swap_state`, or None when the batch
+    was already merged.
+
+    ``merge(prev)`` builds the next state from the committed one (``None``
+    before the first commit). The ``_last_batch`` record
+    ``<lineage>:<batch_id>`` rides INSIDE the staged dir, so the swap
+    commits data and replay guard in one atomic step. A batch whose id is
+    ≤ the recorded one in the same lineage is a replay. A different
+    recorded lineage is a fresh checkpoint whose batch ids restarted at 0,
+    so it merges (r3 ADVICE); ``lineage=None`` (direct-call testing)
+    matches any record. A stale staging dir left by a crash is swept by
+    :func:`_recover_state_swap` on the next batch."""
+    cur = os.path.join(state_dir, "current")
+    applied = os.path.join(cur, "_last_batch")
+    if os.path.exists(applied):
+        with open(applied) as f:
+            rec_lineage, _, rec_id = f.read().strip().rpartition(":")
+        same_lineage = lineage is None or rec_lineage in ("", lineage)
+        if same_lineage and batch_id <= int(rec_id):
+            return None  # replayed batch in THIS lineage — already merged
+    prev = _read_declared(spark, cur, schema) if os.path.exists(cur) else None
+    staged = os.path.join(state_dir, f"_staging_{batch_id}")
+    merge(prev).write.mode("overwrite").parquet(staged)
+    with open(os.path.join(staged, "_last_batch"), "w") as f:
+        f.write(f"{lineage or ''}:{batch_id}")
+    return staged
+
+
+def _swap_state(state_dir: str, batch_id: int, staged: str | None) -> None:
+    """The state commit point: rename ``staged`` over ``current`` (no-op
+    for None). Each rename is atomic; the crash window between the two is
+    repaired by :func:`_recover_state_swap`."""
+    if staged is None:
+        return
+    cur = os.path.join(state_dir, "current")
+    old = os.path.join(state_dir, f"_old_{batch_id}")
+    if os.path.exists(cur):
+        os.rename(cur, old)
+    os.rename(staged, cur)  # atomic swap = commit point (data + _last_batch)
+    if os.path.exists(old):
+        shutil.rmtree(old)
 
 
 def streaming_agg_merge(stream_df: DataFrame, state_dir: str, checkpoint_dir: str):
@@ -649,82 +754,37 @@ def streaming_agg_merge(stream_df: DataFrame, state_dir: str, checkpoint_dir: st
 def make_agg_merge_batch(state_dir: str, checkpoint_dir: str | None = None):
     """The foreachBatch callable behind :func:`streaming_agg_merge`,
     exposed so the replay guard (same batch_id merged twice) is directly
-    testable.
-
-    The ``_last_batch`` record is ``<lineage>:<batch_id>`` (r3 ADVICE):
-    micro-batch ids restart at 0 under a fresh checkpoint lineage, so a
-    bare-id guard would silently skip every batch of a restarted query.
-    The guard only short-circuits when the recorded lineage matches the
-    current one; a different lineage is treated as new and merges.
+    testable. The replay guard and staging write are
+    :func:`_stage_state`'s, the swap :func:`_swap_state`'s;
     ``checkpoint_dir=None`` (direct-call testing) matches any recorded
-    lineage — the same within-lineage replay contract as before."""
-    import json
-    import os
-    import shutil
-
-    def _lineage_id() -> str | None:
-        if checkpoint_dir is None:
-            return None
-        meta = os.path.join(checkpoint_dir, "metadata")
-        with open(meta) as f:
-            return json.load(f)["id"]
+    lineage."""
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         _recover_state_swap(state_dir)
-        lineage = _lineage_id()
-        cur = os.path.join(state_dir, "current")
-        applied = os.path.join(cur, "_last_batch")
-        if os.path.exists(applied):
-            with open(applied) as f:
-                rec = f.read().strip()
-            rec_lineage, _, rec_id = rec.rpartition(":")
-            same_lineage = (
-                lineage is None or rec_lineage == "" or rec_lineage == lineage
-            )
-            if same_lineage and batch_id <= int(rec_id):
-                return  # replayed batch in THIS lineage — already merged
-        partial = (
-            batch_df.groupBy(
-                F.date_format("ts", "yyyy-MM-dd").alias("day"), "event_type"
-            )
-            .agg(
-                F.count("*").cast("bigint").alias("n_events"),
-                F.sum(F.col("value").cast("decimal(18,2)")).alias("sum_v"),
-            )
+        partial = batch_df.groupBy(
+            F.date_format("ts", "yyyy-MM-dd").alias("day"), "event_type"
+        ).agg(
+            F.count("*").cast("bigint").alias("n_events"),
+            F.sum(F.col("value").cast("decimal(18,2)"))
+            .cast("decimal(28,2)")
+            .alias("sum_v"),
         )
-        if os.path.exists(cur):
-            prev = spark.read.parquet(cur)
-            merged = (
-                prev.select("day", "event_type", "n_events",
-                            F.col("sum_v").cast("decimal(28,2)").alias("sum_v"))
-                .unionByName(
-                    partial.select("day", "event_type", "n_events",
-                                   F.col("sum_v").cast("decimal(28,2)").alias("sum_v"))
-                )
+
+        def merge(prev: DataFrame | None) -> DataFrame:
+            if prev is None:
+                return partial
+            return (
+                prev.unionByName(partial)
                 .groupBy("day", "event_type")
                 .agg(
                     F.sum("n_events").cast("bigint").alias("n_events"),
                     F.sum("sum_v").cast("decimal(28,2)").alias("sum_v"),
                 )
             )
-        else:
-            merged = partial.select(
-                "day", "event_type", "n_events",
-                F.col("sum_v").cast("decimal(28,2)").alias("sum_v"),
-            )
-        nxt = os.path.join(state_dir, f"_staging_{batch_id}")
-        merged.write.mode("overwrite").parquet(nxt)
-        # applied-batch record travels INSIDE the staged state: the rename
-        # below commits data and replay-guard in one atomic step
-        with open(os.path.join(nxt, "_last_batch"), "w") as f:
-            f.write(f"{lineage or ''}:{batch_id}")
-        old = os.path.join(state_dir, f"_old_{batch_id}")
-        if os.path.exists(cur):
-            os.rename(cur, old)
-        os.rename(nxt, cur)  # atomic swap = commit point (data + _last_batch)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+
+        spark, lineage = batch_df.sparkSession, _lineage_id(checkpoint_dir)
+        staged = _stage_state(spark, state_dir, batch_id, lineage, AGG_STATE_SCHEMA, merge)
+        _swap_state(state_dir, batch_id, staged)
 
     return merge_batch
 
@@ -760,12 +820,8 @@ def streaming_ingest_dedup(
 def make_ingest_dedup_batch(index_dir: str, out_dir: str):
     """The foreachBatch callable behind :func:`streaming_ingest_dedup`
     (exposed for direct replay testing)."""
-    import os
 
     def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql.window import Window
-
-        spark = batch_df.sparkSession
         marker = os.path.join(out_dir, f"_applied_{batch_id}")
         if os.path.exists(marker):
             return  # replayed batch — admitted rows + index already written
@@ -777,31 +833,18 @@ def make_ingest_dedup_batch(index_dir: str, out_dir: str):
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        index_path = os.path.join(index_dir, "keys")
-        if os.path.exists(index_path):
-            # Crash-window guard (r3 ADVICE): a failed attempt of THIS batch
-            # may already have written its own index partition (crash after
-            # the data/index writes but before the marker). Folding those
-            # keys into `seen` would anti-join the batch's rows away and the
-            # mode-overwrite below would then permanently drop them. Micro-
-            # batch ids are monotone, so the prior corpus is exactly the
-            # partitions with batch_id < current.
-            seen = (
-                spark.read.parquet(index_path)
-                .filter(F.col("batch_id") < F.lit(batch_id))
-                .select("content_key")
-            )
-            admitted = firsts.join(seen, "content_key", "left_anti")
-        else:
-            admitted = firsts
+        seen = _seen_keys(batch_df.sparkSession, index_dir, batch_id)
+        admitted = firsts if seen is None else firsts.join(seen, "content_key", "left_anti")
         # admitted rows land in a batch-id partition (idempotent overwrite),
         # index append is keyed by batch too so a replay overwrites itself
         admitted.write.mode("overwrite").parquet(
             os.path.join(out_dir, f"batch_id={batch_id}")
         )
-        admitted.select("content_key").write.mode("overwrite").parquet(
-            os.path.join(index_path, f"batch_id={batch_id}")
-        )
+        # a NULL text's NULL key never matches the anti-join, so the index
+        # (content_key NOT NULL) leaves it out
+        admitted.select("content_key").filter(F.col("content_key").isNotNull()).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(index_dir, "keys", f"batch_id={batch_id}"))
         with open(marker, "w") as f:
             f.write("ok")
 
@@ -822,8 +865,8 @@ def streaming_curation_funnel(
     ingest subsystems (streaming_ingest_dedup's exactly-once admission,
     make_agg_merge_batch's atomic state merge) into the shape a real
     crawl-ingest pipeline runs: every micro-batch does O(batch) narrow
-    feature work, one semi-join against the key index, and a tiny
-    accounting merge; corpus text is never re-read.
+    feature work, one join against the key index, and one small
+    accounting aggregate; corpus text is never re-read.
 
     Exactly-once, three commit points per batch, each replay-safe:
       1. admitted rows + index keys land in batch_id partitions
@@ -836,6 +879,8 @@ def streaming_curation_funnel(
          skips the merge — no double count),
       3. the ``_applied_{batch}`` marker is written LAST and
          short-circuits fully-committed replays.
+    The next state is staged (written, not swapped) before point 1, so a
+    drifted index or state schema fails the batch before any commit.
 
     Batch twin / oracle: ``e7c_funnel_accounting`` (operators/curation.py)
     computes the same accounting declaratively; with batches arriving in
@@ -858,24 +903,22 @@ def make_curation_funnel_batch(
     checkpoint_dir: str | None = None,
 ):
     """The foreachBatch callable behind :func:`streaming_curation_funnel`
-    (exposed for direct replay/crash-window testing)."""
-    import json
-    import os
-    import shutil
+    (exposed for direct replay/crash-window testing).
 
-    from pyspark.sql.window import Window
-
+    A batch is one persisted FLAGGED frame: every raw row once, as
+    ``doc_id, source, content_key, n_tok`` plus two flags. ``q``: the row
+    passes the shared ``QUALITY_PASS_SQL`` predicate (operators/curation.py;
+    NULL counts as false). ``a``: admitted, i.e. ``q``, first quality row
+    of its content key by doc_id, and absent from the index keys of
+    earlier batches (a left join on the distinct keys). Admitted rows and
+    index keys are ``filter(a)``; the accounting is one
+    ``groupBy("source")`` over the prior state and the frame's per-row
+    conditional counts. All sinks read the one frame, so the feature
+    pass, the index join and the admission window run once per batch."""
     from wx20222_bigdata_spark.operators.curation import (
+        QUALITY_PASS_SQL,
         quality_features,
-        quality_gate,
     )
-
-    def _lineage_id() -> str | None:
-        if checkpoint_dir is None:
-            return None
-        meta = os.path.join(checkpoint_dir, "metadata")
-        with open(meta) as f:
-            return json.load(f)["id"]
 
     def funnel_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -884,118 +927,63 @@ def make_curation_funnel_batch(
         if os.path.exists(marker):
             return  # fully committed batch — replay is a no-op
 
-        # feats feeds three evaluations per batch: the admitted-set
-        # materialization (via quality), the per-source raw counts, and
-        # the quality counts — without a persist the tokenize/feature
-        # pass over the raw batch runs ~3x (observed as numInputRows ≈
-        # 3x the batch size in the r12 state-store audit). Persist for
-        # the batch scope; released with admitted below.
-        feats = quality_features(batch_df).persist()
-        admitted = None
+        # Column expressions are SQL strings: one py4j call per selectExpr
+        # instead of one per Column function, on a path built every batch
+        flagged = quality_features(batch_df).selectExpr(
+            "*", f"coalesce({QUALITY_PASS_SQL}, false) AS q"
+        )
+        unseen = "true"
+        seen = _seen_keys(spark, index_dir, batch_id)
+        if seen is not None:
+            # distinct: a key indexed twice (a fresh checkpoint lineage
+            # restarts batch ids) must not duplicate the left join's rows
+            seen = seen.distinct().selectExpr("content_key", "true AS _seen")
+            flagged = flagged.join(seen, "content_key", "left")
+            unseen = "_seen IS NULL"
+        # q leads the order: the first row is the key's lowest-doc_id
+        # quality row even if an md5 collision mixes passing and failing texts
+        flagged = flagged.selectExpr(
+            "doc_id", "source", "content_key", "n_tok", "q",
+            f"q AND {unseen} AND row_number() OVER "
+            "(PARTITION BY content_key ORDER BY q DESC, doc_id) = 1 AS a",
+        ).persist()
         try:
-            quality = quality_gate(feats)
-            # admission: first occurrence within the batch ...
-            w = Window.partitionBy("content_key").orderBy("doc_id")
-            firsts = (
-                quality.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
+            # accounting: per-row conditional counts, summed per source
+            # together with the prior state in ONE aggregate
+            counts = flagged.selectExpr(
+                "source",
+                "1L AS n_raw",
+                "CAST(q AS BIGINT) AS n_quality",
+                "CAST(a AS BIGINT) AS n_admitted",
+                "IF(a, n_tok, 0L) AS admitted_tokens",
             )
-            # ... and unseen by the persistent index. The index read is
-            # guarded to batch_id < current so a markerless replay cannot
-            # anti-join its own crashed attempt's keys away (the
-            # streaming_ingest_dedup crash-window fix, same contract).
-            index_path = os.path.join(index_dir, "keys")
-            if os.path.exists(index_path):
-                seen = (
-                    spark.read.parquet(index_path)
-                    .filter(F.col("batch_id") < F.lit(batch_id))
-                    .select("content_key")
-                )
-                admitted = firsts.join(seen, "content_key", "left_anti")
-            else:
-                admitted = firsts
-            # the join output feeds three sinks below; evaluate it once
-            admitted = admitted.persist()
 
+            def merge(prev: DataFrame | None) -> DataFrame:
+                rows = counts if prev is None else prev.unionByName(counts)
+                sums = [f"CAST(sum({c}) AS BIGINT) AS {c}" for c in FUNNEL_STATE_SCHEMA.names[1:]]
+                return rows.groupBy("source").agg(*map(F.expr, sums))
+
+            # Stage the accounting state first: its job is the first scan of
+            # the index and the state, so a drifted schema fails the batch
+            # before anything below is written.
+            lineage = _lineage_id(checkpoint_dir)
+            staged = _stage_state(spark, state_dir, batch_id, lineage, FUNNEL_STATE_SCHEMA, merge)
             # commit point 1: admitted docs + index keys, batch-partitioned
+            admitted = flagged.filter("a")
             admitted.select("doc_id", "source", "content_key", "n_tok").write.mode(
                 "overwrite"
             ).parquet(os.path.join(out_dir, f"batch_id={batch_id}"))
             admitted.select("content_key").write.mode("overwrite").parquet(
-                os.path.join(index_path, f"batch_id={batch_id}")
+                os.path.join(index_dir, "keys", f"batch_id={batch_id}")
             )
-
-            # per-batch retention partial (tiny: one row per source)
-            raw = feats.groupBy("source").agg(F.count("*").alias("n_raw"))
-            qc = quality.groupBy("source").agg(F.count("*").alias("n_quality"))
-            adm = admitted.groupBy("source").agg(
-                F.count("*").alias("n_admitted"),
-                F.sum("n_tok").cast("bigint").alias("admitted_tokens"),
-            )
-            partial = (
-                raw.join(qc, "source", "left")
-                .join(adm, "source", "left")
-                .select(
-                    "source",
-                    "n_raw",
-                    F.coalesce("n_quality", F.lit(0)).alias("n_quality"),
-                    F.coalesce("n_admitted", F.lit(0)).alias("n_admitted"),
-                    F.coalesce("admitted_tokens", F.lit(0)).alias("admitted_tokens"),
-                )
-            )
-
-            # commit point 2: accounting merge with the agg-merge replay guard
-            lineage = _lineage_id()
-            cur = os.path.join(state_dir, "current")
-            applied = os.path.join(cur, "_last_batch")
-            already_merged = False
-            if os.path.exists(applied):
-                with open(applied) as f:
-                    rec = f.read().strip()
-                rec_lineage, _, rec_id = rec.rpartition(":")
-                same_lineage = (
-                    lineage is None or rec_lineage == "" or rec_lineage == lineage
-                )
-                already_merged = same_lineage and batch_id <= int(rec_id)
-            if not already_merged:
-                if os.path.exists(cur):
-                    prev = spark.read.parquet(cur)
-                    merged = (
-                        prev.unionByName(partial)
-                        .groupBy("source")
-                        .agg(
-                            F.sum("n_raw").cast("bigint").alias("n_raw"),
-                            F.sum("n_quality").cast("bigint").alias("n_quality"),
-                            F.sum("n_admitted").cast("bigint").alias("n_admitted"),
-                            F.sum("admitted_tokens")
-                            .cast("bigint")
-                            .alias("admitted_tokens"),
-                        )
-                    )
-                else:
-                    merged = partial
-                nxt = os.path.join(state_dir, f"_staging_{batch_id}")
-                merged.write.mode("overwrite").parquet(nxt)
-                with open(os.path.join(nxt, "_last_batch"), "w") as f:
-                    f.write(f"{lineage or ''}:{batch_id}")
-                old = os.path.join(state_dir, f"_old_{batch_id}")
-                if os.path.exists(cur):
-                    os.rename(cur, old)
-                os.rename(nxt, cur)  # atomic swap: state + applied-id together
-                if os.path.exists(old):
-                    shutil.rmtree(old)
-
+            # commit point 2: the state swap (skipped for an already-merged replay)
+            _swap_state(state_dir, batch_id, staged)
         finally:
-            # Release the batch-scoped caches even when a write between
-            # persist and unpersist raises (r12 ADVICE): repeated failing
-            # batch retries in a long-lived stream would otherwise
-            # accumulate cached blocks until executor storage evicts
-            # them. unpersist on a never-persisted frame is a no-op, so
-            # the pre-persist admitted assignment is safe here too.
-            if admitted is not None:
-                admitted.unpersist()
-            feats.unpersist()
+            # Release the batch-scoped cache even when a write raises (r12
+            # ADVICE): repeated failing batch retries in a long-lived stream
+            # would otherwise accumulate cached blocks until executor
+            # storage evicts them.
+            flagged.unpersist()
         # commit point 3: full-batch marker
         with open(marker, "w") as f:
             f.write("ok")
